@@ -303,11 +303,10 @@ object Bench {
       }
     val loadEnd = os.getSystemLoadAverage
     def r3(v: Double) = math.rint(v * 1e3) / 1e3
-    // The stdout summary line must stay ≈400 B: the driver's log-tail
-    // capture is bounded (~3.5 KB) and both r3 and r4 lines carrying the
-    // full per-key map were head-truncated into "parsed": null. Only the
-    // ten slowest keys ride the line; the FULL per-key wall+cpu map goes
-    // to the side detail file below.
+    // `slowest10` is the quick read of the summary line: the ten
+    // slowest keys. The full per-key seconds map rides the same line as
+    // `queries` (so the line is a few KB, not a few hundred bytes), and
+    // the per-key wall+cpu+ok detail goes to the side file below.
     val slowest = results.sortBy(-_._2).take(10)
       .map { case (k, w, _, _, _) => s""""$k":${r3(w)}""" }
       .mkString("{", ",", "}")

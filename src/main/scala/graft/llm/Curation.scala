@@ -27,15 +27,6 @@ import graft.{Q, Tables}
   */
 object Curation {
 
-  /** Bigram array over a pre-split token array. The lambda must index the
-    * ALREADY-SPLIT array — higher-order functions are interpreted (no
-    * codegen / subexpression elimination), so `split(...)` inside the
-    * lambda re-tokenizes the whole document per element (the 60× blow-up
-    * documented in text/Analysis.scala). */
-  private def bigramExpr = expr(
-    """transform(slice(toks, 1, greatest(size(toks) - 1, 0)),
-      |  (t, i) -> concat(t, ' ', toks[i + 1]))""".stripMargin)
-
   /** q_sample_stratified — per-stratum deterministic sampling (training-mix
     * rebalancing): downsample the majority language to 1/4 by key-modulo,
     * keep 1/2 of everything else. Key-modulo, not seeded sample(): the
@@ -89,7 +80,8 @@ object Curation {
       size(col("toks")).as("n_tokens"),
       size(array_distinct(col("toks"))).as("n_distinct"))
     val bgStats = toks
-      .select(col("doc_id"), explode(bigramExpr).as("bg"))
+      .select(col("doc_id"),
+        explode(graft.text.TextOps.ngrams("toks", 2)).as("bg"))
       .groupBy("doc_id", "bg").agg(count(lit(1)).as("c"))
       .groupBy("doc_id").agg(max("c").as("top_c"), sum("c").as("n_bg"))
     base.join(bgStats, "doc_id")

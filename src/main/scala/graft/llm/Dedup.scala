@@ -77,7 +77,7 @@ object Dedup {
     //    non-empty filter. Without the barrier, Catalyst pushed
     //    `size(tokens) > 0` below the exchange to the scan, substituting
     //    toks = split(text) INTO the shingle lambda — the re-split-per-
-    //    element O(tokens²·len) form this file's shingleExpr discipline
+    //    element O(tokens²·len) form TextOps.ngrams's discipline
     //    exists to avoid — evaluated serially in the scan task AND again
     //    (linearly) above the exchange. Measured: the pushed filter alone
     //    was ~3 s wall ≈ cpu (one core) at sf0.1; the whole key scaled
@@ -85,11 +85,8 @@ object Dedup {
     val docs = Tables.spread(Tables.documents(s, dir)
         .select(col("doc_id"), col("text")))
       .withColumn("toks", split(col("text"), " "))
-      .withColumn("tokens", expr(
-        """array_distinct(transform(
-          |  slice(toks, 1, greatest(size(toks) - 2, 0)),
-          |  (t, i) -> concat(t, ' ', toks[i + 1], ' ', toks[i + 2])))"""
-          .stripMargin))
+      .withColumn("tokens",
+        array_distinct(graft.text.TextOps.ngrams("toks", 3)))
       .select(col("doc_id"), col("tokens"))
       .localCheckpoint(false)
       .filter(size(col("tokens")) > 0)

@@ -32,15 +32,10 @@ import graft.{Q, Tables}
   */
 object DedupVariants {
 
-  /** 3-token shingle array (distinct) over a precomputed `toks` column.
-    * The lambda indexes the already-split array — `split(text)[i]` inside
-    * a higher-order lambda re-splits the whole doc per element (interpreted,
-    * no CSE): O(tokens²·len) per doc (see Analysis.bigramExpr). */
-  private def shingleExpr = expr(
-    """array_distinct(transform(
-      |  slice(toks, 1, greatest(size(toks) - 2, 0)),
-      |  (t, i) -> concat(t, ' ', toks[i + 1], ' ', toks[i + 2])))"""
-      .stripMargin)
+  /** Distinct 3-token shingles over a precomputed `toks` column
+    * ([[graft.text.TextOps.ngrams]]). */
+  private def shingleExpr =
+    array_distinct(graft.text.TextOps.ngrams("toks", 3))
 
   /** Stop-shingle document-frequency cap: a shingle present in more than
     * this many documents is dropped from the inverted index before

@@ -41,16 +41,12 @@ import graft.{Q, Tables}
   */
 object Governance {
 
-  /** Distinct 8-token grams over a pre-split `toks` array. The lambda
-    * slices the ALREADY-SPLIT array (cheap array copy) — never re-split
-    * text inside a higher-order lambda (see Analysis.bigramExpr). W=8:
-    * long enough that the 31-word synthetic vocabulary cannot collide by
-    * chance (the observed overlaps are the constructed near-dups), short
-    * enough that every harness doc (min 10 tokens) emits grams. */
-  private def gram8Expr = expr(
-    """array_distinct(transform(
-      |  slice(toks, 1, greatest(size(toks) - 7, 0)),
-      |  (t, i) -> concat_ws(' ', slice(toks, i + 1, 8))))""".stripMargin)
+  /** Distinct 8-token grams over a pre-split `toks` array
+    * ([[graft.text.TextOps.ngrams]]). W=8: long enough that the 31-word
+    * synthetic vocabulary cannot collide by chance (the observed
+    * overlaps are the constructed near-dups), short enough that every
+    * harness doc (min 10 tokens) emits grams. */
+  private def gram8Expr = array_distinct(graft.text.TextOps.ngrams("toks", 8))
 
   /** Engine-portable h32 of a column (SURVEY §7.4.12 md5 idiom). */
   private def h32(colName: String) =

@@ -303,7 +303,7 @@ object TxTable {
   /** Commit with optimistic-concurrency retry: `update` maps the current
     * snapshot's file list to the new COMPLETE list (and may `require` its
     * own conflict invariants — a rewrite asserts its victims are still
-    * current, [[rewriteCommit]]). On a lost race only the tiny manifest
+    * current, [[commitReplace]]). On a lost race only the tiny manifest
     * write repeats; already-staged data files in data/ stay valid because
     * their names are collision-free. Returns the committed version. */
   private[graft] def commit(root: String, op: String,
@@ -357,20 +357,23 @@ object TxTable {
       val newFiles = update(curFiles)
       // skipping stats (VERDICT r17 item 1): carried files keep their
       // parent-manifest stats verbatim (a staged file is immutable, so
-      // its stats are too); files the parent doesn't know get ONE
-      // driver-side parquet-footer read each — commit-bounded, the
-      // Delta/Iceberg write-time-stats discipline. deletes/ entries are
+      // its stats are too); files NOT IN THE PARENT'S LIST get ONE
+      // driver-side parquet-footer read each — so every file's footer is
+      // read once, in the commit that adds it, the Delta/Iceberg
+      // write-time-stats discipline. deletes/ entries are
       // position-delete address files; nothing prunes on those.
       // stats are ADVISORY: a file whose footer can't be read (the
       // concurrency specs commit synthetic entries; a real table could
       // hold a corrupt-footer file) gets NO stats line and is simply
       // never pruned — the commit itself must not fail over skipping
-      // metadata. Footer reads are commit-bounded but run in PARALLEL
-      // (they're tiny independent metadata I/Os; a large init commit
+      // metadata, and a carried stats-less file is never re-read (else
+      // commit v would pay v failed reads). Footer reads run in
+      // PARALLEL (tiny independent metadata I/Os; a large init commit
       // over hundreds of files would otherwise serialize its plan-time
       // savings into commit-time latency).
+      val listed = curFiles.toSet
       val missing = dataEntries(newFiles)
-        .filterNot(f => curStats.contains(f) || statsCache.contains(f))
+        .filterNot(f => listed(f) || statsCache.contains(f))
       if (missing.nonEmpty) {
         import scala.jdk.CollectionConverters._
         val computed =
@@ -389,16 +392,10 @@ object TxTable {
       // entries all survive — and the manifest body carries refs; a
       // lost race reclaims THIS attempt's fresh pages before retrying
       val (body, freshPages) = pagedBody(root, parent, newFiles, stats)
-      val landed =
-        try tryCommitBody(root, cur + 1, props, body)
-        catch { case e: Throwable =>
-          freshPages.foreach(n => java.nio.file.Files.deleteIfExists(
-            logDir(root).toPath.resolve(n)): Unit)
-          throw e
-        }
+      var landed = false
+      try landed = tryCommitBody(root, cur + 1, props, body)
+      finally if (!landed) discardStaged(root, freshPages.map("_txlog/" + _))
       if (landed) return cur + 1
-      freshPages.foreach(n => java.nio.file.Files.deleteIfExists(
-        logDir(root).toPath.resolve(n)): Unit)
       attempt += 1
     }
     sys.error(s"commit lost 1000 consecutive races at $root")
@@ -897,15 +894,14 @@ object TxTable {
   }
 
   /** Attach/advance the `tblschema` prop for an append of physical
-    * frame `phys` on top of version `v`: returns the frame with
-    * narrower-than-declared numeric columns cast UP (files stay
-    * uniform) and the schema props to commit. A v>0 parent WITHOUT the
-    * prop (pre-prop history or externally staged files) stays legacy —
-    * attaching mid-history could claim less schema than old files
-    * hold. */
-  private def withTblSchema(root: String, v: Int, phys: DataFrame)
+    * frame `phys` on top of `parent` (None = the first commit): returns
+    * the frame with narrower-than-declared numeric columns cast UP
+    * (files stay uniform) and the schema props to commit. A parent
+    * WITHOUT the prop (pre-prop history or externally staged files)
+    * stays legacy — attaching mid-history could claim less schema than
+    * old files hold. */
+  private def withTblSchema(parent: Option[Manifest], phys: DataFrame)
       : (DataFrame, Map[String, String]) = {
-    val parent = if (v == 0) None else Some(readManifest(root, v))
     val cur = parent.flatMap(schemaOf)
     (parent, cur) match {
       case (Some(_), None) => (phys, Map.empty) // legacy table: stay legacy
@@ -1363,13 +1359,7 @@ object TxTable {
     }
   }
 
-  /** Append commit: stage df, publish prev ++ staged. The caller's
-    * frame carries LOGICAL names; staging converts to physical. A
-    * logical name colliding with a TOMBSTONED physical name (re-add
-    * after drop) writes under a fresh `<name>__r<version>` physical
-    * name registered in the same commit — dropped data never
-    * resurrects. */
-  /** Thrown by the append paths' metadata conflict check when a
+  /** Thrown by the append's metadata conflict check when a
     * rename/drop/promote landed between schema planning and the winning
     * OCC attempt — the staged files carry the PLANNED physical names
     * and merged schema, so committing their props would silently revert
@@ -1378,6 +1368,22 @@ object TxTable {
   private class MetaRaceRetry extends RuntimeException(
     "txtable append: schema/column-mapping changed under the planned " +
       "write — replanning")
+
+  /** Resolve `name` as the LOGICAL column name of ANY retained version,
+    * newest first, to its stable PHYSICAL column (round 20, OCC
+    * auto-retry): a write analyzed against one snapshot can arrive at
+    * plan time after a concurrent rename changed the logical view —
+    * the name it carries is some era's alias of a physical column that
+    * never moved. O(retained versions) manifest metadata, and only on
+    * the race path (current-name resolution failed). */
+  private[graft] def resolveHistoricalLogical(root: String,
+      name: String): Option[String] =
+    versions(root).reverse.view.flatMap { v =>
+      inferLogicalSchema(root, v)
+        .filter(_.fieldNames.contains(name))
+        .map(_ => colMapOf(readManifest(root, v))
+          .flatMap(_.logToPhys.get(name)).getOrElse(name))
+    }.headOption
 
   /** Is an APPEND whose files were staged as `stagedCols` (physical
     * name, stored type) safe to land under the CURRENT schema props —
@@ -1395,22 +1401,6 @@ object TxTable {
     * is free: [[commitChecked]] inherits schema/colmap props from the
     * CURRENT manifest, so landing the file list adopts the new
     * metadata. */
-  /** Resolve `name` as the LOGICAL column name of ANY retained version,
-    * newest first, to its stable PHYSICAL column (round 20, OCC
-    * auto-retry): a write analyzed against one snapshot can arrive at
-    * plan time after a concurrent rename changed the logical view —
-    * the name it carries is some era's alias of a physical column that
-    * never moved. O(retained versions) manifest metadata, and only on
-    * the race path (current-name resolution failed). */
-  private[graft] def resolveHistoricalLogical(root: String,
-      name: String): Option[String] =
-    versions(root).reverse.view.flatMap { v =>
-      inferLogicalSchema(root, v)
-        .filter(_.fieldNames.contains(name))
-        .map(_ => colMapOf(readManifest(root, v))
-          .flatMap(_.logToPhys.get(name)).getOrElse(name))
-    }.headOption
-
   private[graft] def appendRebaseCompatible(
       stagedCols: Seq[(String, DataType)],
       cur: Map[String, String]): Boolean = {
@@ -1427,14 +1417,19 @@ object TxTable {
     }
   }
 
-  private def schemaMetaOf(root: String, v: Int): Map[String, String] =
-    if (v == 0) Map.empty
-    else readManifest(root, v).props.filter {
-      case (k, _) => SchemaProps(k)
-    }
-
+  /** Append commit: stage df, publish prev ++ staged. The caller's
+    * frame carries LOGICAL names; staging converts to physical. A
+    * logical name colliding with a TOMBSTONED physical name (re-add
+    * after drop) writes under a fresh `<name>__r<version>` physical
+    * name registered in the same commit — dropped data never
+    * resurrects. Rows stage like the table is laid out
+    * ([[writeDataLike]]): under `data/<col>=<v>/…` for the given
+    * `partCols` ([[appendPartitioned]]), under `data/__bucket=<b>/`
+    * with the shared hash for a BUCKETED table (a flat stage would
+    * corrupt its layout), flat otherwise. */
   private[graft] def append(s: SparkSession, root: String, df: DataFrame,
-      extraProps: Map[String, String] = Map.empty): Int = {
+      extraProps: Map[String, String] = Map.empty,
+      partCols: Seq[String] = Nil): Int = {
     // metadata-race replan loop (ADVICE r18): the schema/colmap props
     // are computed from the CURRENT manifest, but commit runs its own
     // OCC loop — without a check, a promote/rename landing in between
@@ -1444,33 +1439,25 @@ object TxTable {
     var round = 0
     while (true) {
       val v = currentVersion(root)
-      val planned = schemaMetaOf(root, v)
-      val cm = if (v == 0) None else colMapOf(readManifest(root, v))
-      val (phys, cmProps) = cm match {
-        case None => (df, Map.empty[String, String])
-        case Some(m) =>
-          val fresh = df.columns.toSeq.filter(c =>
-            !m.logToPhys.contains(c) && m.droppedPhys.contains(c))
-          val m2 =
-            if (fresh.isEmpty) m
-            else m.copy(renames =
-              m.renames ++ fresh.map(c => c -> s"${c}__r${v + 1}"))
-          (toPhysical(df, Some(m2)),
-            if (fresh.isEmpty) Map.empty[String, String]
-            else encodeColMapProps(m2))
-      }
+      val parent = if (v == 0) None else Some(readManifest(root, v))
+      val planned = parent.fold(Map.empty[String, String])(
+        _.props.filter { case (k, _) => SchemaProps(k) })
+      val cm0 = parent.flatMap(colMapOf)
+      val fresh = cm0.toSeq.flatMap(m => df.columns.toSeq.filter(c =>
+        !m.logToPhys.contains(c) && m.droppedPhys.contains(c)))
+      val cm = cm0.map(m => m.copy(renames =
+        m.renames ++ fresh.map(c => c -> s"${c}__r${v + 1}")))
+      val cmProps =
+        if (fresh.isEmpty) Map.empty[String, String]
+        else encodeColMapProps(cm.get)
       // schema tracking: merge this append's physical schema into the
       // recorded table schema (adds evolve, narrower numerics cast up,
       // wider ones fail loudly pointing at promoteColumnType)
-      val (physCast, schemaProps) = withTblSchema(root, v, phys)
-      // a BUCKETED table's append routes rows under data/__bucket=<b>/
-      // with the shared hash — a flat stage would corrupt the layout
-      val bucket =
-        if (v == 0) None else bucketSpecOf(readManifest(root, v))
-      val added = bucket match {
-        case Some((bc, n)) => stageBucketed(s, root, physCast, bc, n)
-        case None => writeData(s, root, physCast)
-      }
+      val (physCast, schemaProps) =
+        withTblSchema(parent, toPhysical(df, cm))
+      val added = writeDataLike(s, root, physCast,
+        partCols.map(c => cm.flatMap(_.logToPhys.get(c)).getOrElse(c)),
+        parent.flatMap(bucketSpecOf))
       try {
         return commitChecked(root, "append", _ ++ added,
           extraProps ++ cmProps ++ schemaProps,
@@ -1479,9 +1466,9 @@ object TxTable {
             if (now != planned) throw new MetaRaceRetry
           })
       } catch {
-        case _: MetaRaceRetry =>
-          added.foreach(f => java.nio.file.Files.deleteIfExists(
-            new java.io.File(root, f).toPath): Unit)
+        case e: Throwable =>
+          discardStaged(root, added)
+          if (!e.isInstanceOf[MetaRaceRetry]) throw e
           round += 1
           if (round >= 20) sys.error(
             s"txtable append at $root lost 20 consecutive metadata " +
@@ -1507,50 +1494,10 @@ object TxTable {
   private[graft] def appendPartitioned(s: SparkSession, root: String,
       df: DataFrame, partCol: String,
       extraProps: Map[String, String] = Map.empty): Int =
-    appendPartitionedCols(s, root, df, Seq(partCol), extraProps)
+    append(s, root, df, extraProps, Seq(partCol))
 
-  /** Multi-column twin of [[appendPartitioned]] (round 20): rows land
-    * under nested `data/a=…/b=…/` directories, outermost column
-    * first; every column's path segment lifts into exact min = max
-    * stats, so pruning composes per column with zero extra
-    * machinery. */
-  private[graft] def appendPartitionedCols(s: SparkSession, root: String,
-      df: DataFrame, partCols: Seq[String],
-      extraProps: Map[String, String] = Map.empty): Int = {
-    require(partCols.nonEmpty)
-    // same metadata-race replan loop as [[append]] (ADVICE r18)
-    var round = 0
-    while (true) {
-      val v = currentVersion(root)
-      val planned = schemaMetaOf(root, v)
-      val cm = if (v == 0) None else colMapOf(readManifest(root, v))
-      val physParts = partCols.map(c =>
-        cm.flatMap(_.logToPhys.get(c)).getOrElse(c))
-      val (physCast, schemaProps) =
-        withTblSchema(root, v, toPhysical(df, cm))
-      val added = stagePartitioned(s, root, physCast, physParts)
-      try {
-        return commitChecked(root, "append", _ ++ added,
-          extraProps ++ schemaProps,
-          cur => {
-            val now = cur.filter { case (k, _) => SchemaProps(k) }
-            if (now != planned) throw new MetaRaceRetry
-          })
-      } catch {
-        case _: MetaRaceRetry =>
-          added.foreach(f => java.nio.file.Files.deleteIfExists(
-            new java.io.File(root, f).toPath): Unit)
-          round += 1
-          if (round >= 20) sys.error(
-            s"txtable appendPartitioned at $root lost 20 consecutive " +
-              "metadata races — giving up")
-      }
-    }
-    -1 // unreachable
-  }
-
-  /** Partition-preserving staging core behind [[appendPartitioned]] and
-    * the rewrite paths' [[writeDataLike]]: write
+  /** Partition-preserving staging core behind [[writeDataLike]]
+    * (appends and rewrites alike): write
     * `partitionBy(partCols…)` into a dot-dir, move each (possibly
     * nested) partition directory's files under `data/a=…/b=…/`,
     * return the root-relative names. */
@@ -1587,87 +1534,109 @@ object TxTable {
       files
     })
 
-  /** Rewrite-commit core (the delete): `matching` filters a snapshot
-    * frame to the rows being removed, `surviving` is its complement.
-    * Discovers the files holding ≥1 matching row via the scan's
-    * `_metadata.file_path` (collect bounded by FILE count), rewrites ONLY
-    * those without the matching rows, and commits (prev − affected) ∪
-    * rewritten. The affected files are NOT unlinked — a reader pinned on
-    * the pre-delete snapshot keeps reading them until [[vacuum]]; the
-    * update closure asserts the victims are still current, so a
-    * concurrent rewrite of the same files fails loudly instead of losing
-    * a delete (the table-format conflict check). Returns (version,
-    * affected relative names); no matching rows → no commit, version
-    * unchanged. */
-  private[graft] def rewriteCommit(s: SparkSession, root: String,
-      matching: DataFrame => DataFrame,
-      surviving: DataFrame => DataFrame): (Int, Seq[String]) = {
-    // the hidden _metadata column resolves only against the file-source
-    // relation itself — materialize the path BEFORE `matching` wraps the
-    // scan in joins/filters
+  /** THE copy-on-write engine behind [[deleteWhere]], [[deleteMatching]]
+    * and [[mergeCommit]]. It pins the read version `v0` and the
+    * position-delete set its input applies ONCE, so the rewrite input
+    * and the conflict check see one version (r17 review). `discover`
+    * maps the ADDRESSED snapshot of v0 to the rows the op touches; their
+    * `__tx_file` names the victim files (the hidden `_metadata` column
+    * resolves only against the file-source relation, so the address is
+    * materialized BEFORE `discover` wraps the scan in joins/filters; one
+    * collect bounded by FILE count). `rewrite` maps the victims' rows
+    * (logical view, v0's deletes applied) and the table's logical
+    * columns to the rows that replace them; `inserts` maps the
+    * discovered rows to rows staged beside the rewrite (a merge's
+    * unmatched source rows), projected to the table's columns. Both
+    * stage like the table is laid out — partition-preserving (round 18:
+    * the basePath read re-derives the directory column, partitionBy
+    * lays it back), bucket-routed, logical names in and physical names
+    * out, which also physically sheds DROPPED columns (the Delta
+    * rewrite behavior) — and land through [[commitReplace]]. The
+    * victims are NOT unlinked: a reader pinned on the pre-rewrite
+    * snapshot keeps reading them until [[vacuum]]. Nothing discovered
+    * and no `inserts` → no commit, version unchanged. Returns (version,
+    * victim relative names, inserted-row count). */
+  private def copyOnWrite(s: SparkSession, root: String, op: String,
+      discover: DataFrame => DataFrame,
+      rewrite: (DataFrame, Seq[String]) => DataFrame,
+      inserts: DataFrame => Option[DataFrame] = _ => None)
+      : (Int, Seq[String], Long) = {
     val v0 = currentVersion(root)
-    // the position-delete set the rewrite input applies: if a concurrent
-    // delete-dv lands before our commit, the rewritten files would
-    // republish its freshly-deleted rows — the closure requires the set
-    // is unchanged (r17 review: a DV commit removes no data file, so the
-    // affected-files check alone cannot see this race). Captured ONCE
-    // and passed to the input read, so input and check see one version.
-    val dvAtRead =
-      if (v0 == 0) Seq.empty[String]
-      else deleteEntries(readManifest(root, v0).files)
-    val affAbs = matching(snapshotCore(s, root, v0,
-        mergeSchema = false, withAddress = true))
-      .select(col("__tx_file").as("f")).distinct()
+    val snap = snapshotCore(s, root, v0,
+      mergeSchema = false, withAddress = true)
+    val m0 = readManifest(root, v0)
+    val dvAtRead = deleteEntries(m0.files)
+    val hit = discover(snap)
+    val victims = hit.select(col("__tx_file").as("f")).distinct()
       .collect().map(r => decodePath(r.getString(0))).sorted.toSeq
-    if (affAbs.isEmpty) (currentVersion(root), Seq.empty)
+    val ins = inserts(hit)
+    val nIns = ins.fold(0L)(_.count())
+    if (victims.isEmpty && ins.isEmpty) (currentVersion(root), Nil, 0L)
     else {
-      val affRel = affAbs.map(relOf(root, _))
-      // partition-preserving rewrite (round 18): survivors of a
-      // partitioned table re-stage under their own partition dirs (the
-      // basePath read re-derives the column, partitionBy lays it back).
-      // The rewrite input is the LOGICAL view (`surviving` is a
-      // user-facing predicate) and re-stages physical — which also
-      // physically sheds DROPPED columns, the Delta rewrite behavior.
-      val m0 = readManifest(root, v0)
-      val partCols = partColsOf(dataEntries(m0.files))
+      val cols = snap.columns.toSeq.filterNot(Set("__tx_file", "__tx_pos"))
       val cm0 = colMapOf(m0)
-      val rewritten = writeDataLike(s, root,
-        toPhysical(surviving(applyColMap(
-          readDataWithDeletes(s, root, affAbs, dvAtRead), cm0)), cm0),
-        partCols, bucketSpecOf(m0))
-      val affSet = affRel.toSet
-      val v =
-        try commit(root, "delete", { prev =>
-          require(affRel.forall(prev.toSet),
-            s"concurrent rewrite conflict at $root: an affected file " +
-              "is no longer in the current snapshot")
-          require(deleteEntries(prev) == dvAtRead,
-            s"concurrent position-delete conflict at $root: the delete " +
-              "set changed since the rewrite input was read — " +
-              "committing would republish freshly-deleted rows")
-          prev.filterNot(affSet) ++ rewritten
-        })
-        catch { case e: Throwable =>
-          discardStaged(root, rewritten); throw e
-        }
-      (v, affRel)
+      val partCols = partColsOf(dataEntries(m0.files))
+      def stage(df: DataFrame): Seq[String] = writeDataLike(s, root,
+        toPhysical(df, cm0), partCols, bucketSpecOf(m0))
+      val rewritten =
+        if (victims.isEmpty) Nil
+        else stage(rewrite(applyColMap(
+          readDataWithDeletes(s, root, m0, victims, dvAtRead), cm0), cols))
+      val appended =
+        try if (nIns == 0) Nil else stage(ins.get.select(cols.map(col): _*))
+        catch { case e: Throwable => discardStaged(root, rewritten); throw e }
+      val victimRel = victims.map(relOf(root, _))
+      (commitReplace(root, op, victimRel, dvAtRead, rewritten ++ appended),
+        victimRel, nIns)
     }
+  }
+
+  /** THE copy-on-write conflict check, shared by the library rewrites
+    * ([[copyOnWrite]]) and SQL row-level DML (TxGroupReplaceWrite):
+    * commit `prev − victims ++ staged` as `op` only while every victim
+    * is still listed (a concurrent rewrite of the same files fails
+    * loudly instead of losing its rows) AND the delete-entry set still
+    * equals `dvAtRead`, the set the rewrite input applied (a DV commit
+    * removes no data file, so the victim check alone cannot see it —
+    * landing would republish its freshly-deleted rows). `checkProps`
+    * is [[commitChecked]]'s metadata check. Any failure reclaims the
+    * staged files. */
+  private[graft] def commitReplace(root: String, op: String,
+      victims: Seq[String], dvAtRead: Seq[String], staged: Seq[String],
+      checkProps: Map[String, String] => Unit = _ => ()): Int = {
+    val gone = victims.toSet
+    try commitChecked(root, op, { prev =>
+      require(victims.forall(prev.toSet),
+        s"concurrent rewrite conflict at $root: a file this $op read is " +
+          "no longer in the current snapshot — retry")
+      require(deleteEntries(prev) == dvAtRead,
+        s"concurrent position-delete conflict at $root: the delete set " +
+          s"changed since this $op read its input — committing would " +
+          "resurrect freshly-deleted rows; retry")
+      prev.filterNot(gone) ++ staged
+    }, Map.empty, checkProps)
+    catch { case e: Throwable => discardStaged(root, staged); throw e }
   }
 
   /** Read specific data files with the GIVEN position deletes applied —
     * the rewrite/merge input: a file rewrite must not resurrect
     * DV-deleted rows (the merge-on-read contract; LayoutSpec pins it).
     * The caller passes the delete-entry set it captured at its read
-    * version — the SAME set its commit closure then requires unchanged,
-    * so the input and the conflict check can never disagree about which
+    * version — the SAME set its commit then requires unchanged, so the
+    * input and the conflict check can never disagree about which
     * deletes the rewrite absorbed (r17 review: reading "current" here
     * while checking v0's set let a mid-flight DV commit make the two
-    * diverge). */
+    * diverge). The files read under `m`'s tracked schema when present
+    * (as [[snapshotCore]] does): footer inference reads ONE victim's
+    * footer, so a victim written before a schema-evolving append would
+    * make the rewrite silently drop the later column's values from
+    * every other victim. */
   private def readDataWithDeletes(s: SparkSession, root: String,
-      absFiles: Seq[String], dvs: Seq[String]): DataFrame = {
+      m: Manifest, absFiles: Seq[String], dvs: Seq[String]): DataFrame = {
     // basePath: partitioned files re-derive their directory column, so
     // a rewrite input carries it (inert for flat layouts)
-    val rd = s.read.option("basePath", s"$root/data")
+    val rd0 = s.read.option("basePath", s"$root/data")
+    val rd = schemaOf(m).fold(rd0)(rd0.schema)
     if (dvs.isEmpty) rd.parquet(absFiles: _*)
     else applyDeletes(s, root,
       withAddressCols(rd.parquet(absFiles: _*)), dvs)
@@ -1679,7 +1648,8 @@ object TxTable {
     * listed, so an abort path that walked away would leak its staged
     * commit forever (r17 review). Safe by construction — a staged file
     * becomes referenced only by the commit that just refused to land. */
-  private def discardStaged(root: String, staged: Seq[String]): Unit =
+  private[graft] def discardStaged(root: String, staged: Seq[String])
+      : Unit =
     staged.foreach { f =>
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(root, f)): Unit
@@ -1691,20 +1661,26 @@ object TxTable {
     * therefore be NOT(coalesce(pred, false)), not `!pred`: a bare
     * negation is also NULL on NULL, which would silently drop any
     * NULL-predicate row that shares a file with a matching one (r17
-    * review; LayoutSpec pins the NULL-row survival). */
+    * review; LayoutSpec pins the NULL-row survival). Rewrites ONLY the
+    * files holding a matching row. Returns (version, affected relative
+    * names); no matching rows → no commit, version unchanged. */
   private[graft] def deleteWhere(s: SparkSession, root: String,
-      pred: Column): (Int, Seq[String]) =
-    rewriteCommit(s, root, _.filter(pred),
-      _.filter(!coalesce(pred, lit(false))))
+      pred: Column): (Int, Seq[String]) = {
+    val (v, aff, _) = copyOnWrite(s, root, "delete", _.filter(pred),
+      (rows, _) => rows.filter(!coalesce(pred, lit(false))))
+    (v, aff)
+  }
 
   /** Delete-under-commit by key manifest (the privacy-queue shape): the
     * bounded key set rides a broadcast for both the file discovery
     * (left_semi) and the survivor rewrite (left_anti). */
   private[graft] def deleteMatching(s: SparkSession, root: String,
-      keys: DataFrame, keyCol: String): (Int, Seq[String]) =
-    rewriteCommit(s, root,
+      keys: DataFrame, keyCol: String): (Int, Seq[String]) = {
+    val (v, aff, _) = copyOnWrite(s, root, "delete",
       _.join(broadcast(keys), Seq(keyCol), "left_semi"),
-      _.join(broadcast(keys), Seq(keyCol), "left_anti"))
+      (rows, _) => rows.join(broadcast(keys), Seq(keyCol), "left_anti"))
+    (v, aff)
+  }
 
   /** MERGE-ON-READ delete (the deletion-vector / Iceberg-v2
     * position-delete shape): instead of rewriting every file that holds
@@ -2298,21 +2274,14 @@ object TxTable {
     * a broadcast semi-probe on the source keys (doubling as
     * affected-file listing); everything else — matched keys, rewrite
     * inputs, appends, tombstone keys — is commit-bounded and rides
-    * broadcasts. The update closure requires the victims are still
-    * current (conflict check). Returns (version, affected files,
-    * inserted-row count). */
+    * broadcasts. It runs on the [[copyOnWrite]] engine, adding only
+    * its row transform and its staged inserts; a merge commits even
+    * when it matched and inserted nothing. Returns (version, affected
+    * files, inserted-row count). */
   private[graft] def mergeCommit(s: SparkSession, root: String,
       source: DataFrame, keyCol: String, payloadCol: String,
       deleteWhen: Option[Column] = None)
       : (Int, Seq[String], Long) = {
-    val v0 = currentVersion(root)
-    // captured once, passed to the rewrite input AND required unchanged
-    // at commit — input and conflict check see one version (r17 review)
-    val dvAtRead =
-      if (v0 == 0) Seq.empty[String]
-      else deleteEntries(readManifest(root, v0).files)
-    val snap = snapshotCore(s, root, v0,
-      mergeSchema = false, withAddress = true)
     // materialize the caller's source ONCE (ADVICE r17): the raw frame
     // is otherwise evaluated by the semi-probe, the insert count, the
     // insert write, and the payload join separately — a
@@ -2322,22 +2291,6 @@ object TxTable {
     // this reason; merge sources are commit-sized, so the checkpoint is
     // bounded.
     val src = source.localCheckpoint(true)
-    val srcKeys = src.select(keyCol)
-    // one scan: matched keys + the files that hold them
-    val matched = snap
-      .join(broadcast(srcKeys), Seq(keyCol), "left_semi")
-      .select(col(keyCol), col("__tx_file"))
-      .localCheckpoint(true)
-    val affAbs = matched.select(col("__tx_file").as("f")).distinct()
-      .collect().map(r => decodePath(r.getString(0))).sorted.toSeq
-    // partition-preserving merge (round 18): rewrites AND appends of a
-    // partitioned table land under their partition dirs; logical view
-    // in, physical names out (column mapping)
-    val m0 = readManifest(root, v0)
-    val partCols0 = partColsOf(dataEntries(m0.files))
-    val bucket0 = bucketSpecOf(m0)
-    val cm0 = colMapOf(m0)
-    val matchedKeys = matched.select(keyCol).distinct()
     // WHEN MATCHED [AND deleteWhen] THEN DELETE (VERDICT r17 item 7):
     // source rows where the clause predicate is TRUE are tombstones —
     // their matched table rows are DROPPED from the rewrite output
@@ -2351,45 +2304,21 @@ object TxTable {
     val srcLive = deleteWhen.fold(src)(_ => src.filter(!isDel))
     val delKeys = deleteWhen.map(_ =>
       src.filter(isDel).select(keyCol).distinct())
-    val inserts = srcLive
-      .join(broadcast(matchedKeys), Seq(keyCol), "left_anti")
-    val nIns = inserts.count()
-    val cols = snapshot(s, root, v0).columns
     val newPayload = srcLive
       .select(col(keyCol), col(payloadCol).as("__tx_new"))
-    val rewritten =
-      if (affAbs.isEmpty) Seq.empty[String]
-      else writeDataLike(s, root, toPhysical({
-        val base = applyColMap(
-          readDataWithDeletes(s, root, affAbs, dvAtRead), cm0)
-        val kept = delKeys.fold(base)(dk =>
-          base.join(broadcast(dk), Seq(keyCol), "left_anti"))
-        kept.join(broadcast(newPayload), Seq(keyCol), "left")
-          .withColumn(payloadCol,
-            coalesce(col("__tx_new"), col(payloadCol)))
-          .select(cols.map(col): _*)
-      }, cm0), partCols0, bucket0)
-    val appended =
-      if (nIns == 0) Seq.empty[String]
-      else writeDataLike(s, root,
-        toPhysical(inserts.select(cols.map(col): _*), cm0), partCols0,
-        bucket0)
-    val affRel = affAbs.map(relOf(root, _))
-    val affSet = affRel.toSet
-    val v =
-      try commit(root, "merge", { prev =>
-        require(affRel.forall(prev.toSet),
-          s"concurrent rewrite conflict at $root: a merge victim is no " +
-            "longer in the current snapshot")
-        require(deleteEntries(prev) == dvAtRead,
-          s"concurrent position-delete conflict at $root: the delete " +
-            "set changed since the merge input was read")
-        prev.filterNot(affSet) ++ rewritten ++ appended
-      })
-      catch { case e: Throwable =>
-        discardStaged(root, rewritten ++ appended); throw e
-      }
-    (v, affRel, nIns)
+    copyOnWrite(s, root, "merge",
+      // one scan: matched keys + the files that hold them
+      _.join(broadcast(src.select(keyCol)), Seq(keyCol), "left_semi")
+        .select(col(keyCol), col("__tx_file"))
+        .localCheckpoint(true),
+      (rows, cols) => delKeys
+        .fold(rows)(dk => rows.join(broadcast(dk), Seq(keyCol), "left_anti"))
+        .join(broadcast(newPayload), Seq(keyCol), "left")
+        .withColumn(payloadCol, coalesce(col("__tx_new"), col(payloadCol)))
+        .select(cols.map(col): _*),
+      matched => Some(srcLive.join(
+        broadcast(matched.select(keyCol).distinct()), Seq(keyCol),
+        "left_anti")))
   }
 
   /** q_table_merge — MERGE INTO under one atomic commit (round 17): the

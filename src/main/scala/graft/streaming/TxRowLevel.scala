@@ -29,9 +29,9 @@ import graft.sources.TxTable
   *    records the files it planned (the groups), the version it read,
   *    and the position-delete set its recomputation absorbed; the
   *    write's commit replaces exactly those files with the staged
-  *    recomputation — `prev − planned ++ staged` — under the same OCC
-  *    conflict checks as the library rewrite paths ([[TxTable
-  *    .rewriteCommit]]): planned files must still be current (no
+  *    recomputation — `prev − planned ++ staged` — through the ONE
+  *    conflict check the library rewrite paths use ([[TxTable
+  *    .commitReplace]]): planned files must still be current (no
   *    concurrent rewrite), the DV set must be unchanged (a concurrent
   *    merge-on-read delete must not be resurrected), and the
   *    schema/colmap props must match what the write planned against.
@@ -155,23 +155,6 @@ private[streaming] class TxGroupReplaceWrite(root: String,
       case Some(paths) => g.kept.filter(f => paths(s"$root/$f"))
     }
     if (kept.isEmpty && staged.isEmpty) return // nothing matched: no-op
-    val keptSet = kept.toSet
-    try {
-      TxTable.commitChecked(root, opName, { prev =>
-        require(kept.forall(prev.toSet),
-          s"concurrent rewrite conflict at $root: a file this $opName " +
-            "read is no longer in the current snapshot — retry")
-        require(TxTable.deleteEntries(prev) == g.dvs,
-          s"concurrent position-delete conflict at $root: the delete " +
-            s"set changed since this $opName read its input — " +
-            "committing would resurrect freshly-deleted rows; retry")
-        prev.filterNot(keptSet) ++ staged
-      }, Map.empty, checkMeta): Unit
-    } catch {
-      case e: Throwable =>
-        staged.foreach(f => java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(root, f)): Unit)
-        throw e
-    }
+    TxTable.commitReplace(root, opName, kept, g.dvs, staged, checkMeta): Unit
   }
 }

@@ -528,7 +528,7 @@ private[streaming] class TxTableScan(required: StructType,
         if (parsed.isEmpty || parsed.exists(_._2.isEmpty)) None
         else Some(parsed.groupBy(_._2.get).toSeq
           .map { case (k, fs) => (k, fs.map(_._1)) }
-          .sortBy(_._1.mkString(" ")))
+          .sortBy(_._1.mkString("\u0000")))
       }
 
   /** Storage-partitioned joins (round 20, VERDICT r19 item 1): with
@@ -924,13 +924,9 @@ private[streaming] class TxTableBatchWrite(root: String,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case TxFileCommitMessage(ns) => ns.foreach { n =>
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(root, n)): Unit
-      }
-      case _ => ()
-    }
+    TxTable.discardStaged(root, messages.toSeq.collect {
+      case TxFileCommitMessage(ns) => ns
+    }.flatten)
 }
 
 /** One query column's write shape: its ordinal in the incoming row,

@@ -18,16 +18,6 @@ import graft.{Q, Tables}
   */
 object Analysis {
 
-  /** Token-bigram array over a precomputed `toks` column (the
-    * langid/fingerprint shingle unit). The lambda indexes the ALREADY-SPLIT
-    * array — never `split(text)[i]` inside the lambda: higher-order
-    * functions are interpreted (no codegen, no subexpression elimination),
-    * so an inner split re-tokenizes the whole document per element —
-    * O(tokens²·len) per doc, measured as a 60× blow-up at sf0.1. */
-  private def bigramExpr = expr(
-    """transform(slice(toks, 1, greatest(size(toks) - 1, 0)),
-      |  (t, i) -> concat(t, ' ', toks[i + 1]))""".stripMargin)
-
   private def withToks(df: DataFrame): DataFrame =
     df.withColumn("toks", split(col("text"), " "))
 
@@ -46,7 +36,8 @@ object Analysis {
     // (cache-ownership contract).
     val docBigrams = withToks(Tables.spread(Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("text"))))
-      .select(col("doc_id"), col("lang"), explode(bigramExpr).as("bg"))
+      .select(col("doc_id"), col("lang"),
+        explode(TextOps.ngrams("toks", 2)).as("bg"))
       .distinct()
       .localCheckpoint(false)
     val profiles = docBigrams
@@ -128,7 +119,7 @@ object Analysis {
     * shingle sets (the winnowing primitive). */
   def qTextFingerprint(s: SparkSession, dir: String): DataFrame =
     withToks(Tables.documents(s, dir))
-      .select(col("doc_id"), explode(bigramExpr).as("sh"))
+      .select(col("doc_id"), explode(TextOps.ngrams("toks", 2)).as("sh"))
       .select(col("doc_id"),
         expr("cast(conv(substring(md5(sh), 1, 8), 16, 10) as bigint)")
           .as("h"))

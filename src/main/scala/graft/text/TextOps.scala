@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
@@ -27,6 +27,22 @@ object TextOps {
     "small", "large")
 
   private def stopList = stopWords.map(w => s"'$w'").mkString(", ")
+
+  /** THE token n-gram builder: over the ALREADY-SPLIT array column
+    * `toks`, gram i is `toks[i] ' ' … ' ' toks[i + n - 1]` for every
+    * window that fits (`greatest(size - (n - 1), 0)` bounds the slice,
+    * so an array shorter than n yields no grams). The lambda indexes
+    * the pre-split array — never `split(text)[i]` inside it:
+    * higher-order functions are interpreted (no codegen, no
+    * subexpression elimination), so an inner split re-tokenizes the
+    * whole document per element — O(tokens²·len) per doc, measured as
+    * a 60× blow-up at sf0.1. Callers that need a set wrap it in
+    * `array_distinct`. */
+  private[graft] def ngrams(toks: String, n: Int): Column = {
+    val rest = (1 until n).map(k => s", ' ', $toks[i + $k]").mkString
+    expr(s"transform(slice($toks, 1, greatest(size($toks) - ${n - 1}, 0))," +
+      s" (t, i) -> concat(t$rest))")
+  }
 
   /** q_text_clean — lowercase, strip non-letters, collapse whitespace. */
   def qTextClean(s: SparkSession, dir: String): DataFrame =
@@ -60,10 +76,7 @@ object TextOps {
   def qTextNgrams(s: SparkSession, dir: String): DataFrame = {
     val bigrams = Tables.documents(s, dir)
       .withColumn("tokens", split(col("text"), " "))
-      .select(col("lang"), explode(expr(
-        """transform(slice(tokens, 1, size(tokens) - 1),
-          |          (t, i) -> concat(t, ' ', tokens[i + 1]))""".stripMargin))
-        .as("bigram"))
+      .select(col("lang"), explode(ngrams("tokens", 2)).as("bigram"))
       .groupBy("lang", "bigram").agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy("lang")
       .orderBy(col("cnt").desc, col("bigram").asc)

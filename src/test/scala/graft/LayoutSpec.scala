@@ -465,6 +465,90 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
       "the final manifest is not exactly the union of all writers")
   }
 
+  test("TxTable: a data entry's footer is read only by the commit that " +
+      "lists it first — a carried stats-less entry stays stats-less") {
+    import spark.implicits._
+    val root = mkTable("footeronce")
+    sources.TxTable.commit(root, "append", _ :+ "data/x")
+    // a VALID parquet file appears at the synthetic entry's path after
+    // the commit that listed it; re-reading carried entries' footers
+    // would now lift stats for it
+    val src = graft.Scratch.dir("txtable", "spec_footeronce_src")
+    Seq((1L, "a")).toDF("k", "s").coalesce(1).write.parquet(src)
+    val part = new java.io.File(src).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(part.toPath,
+      new java.io.File(root, "data/x").toPath): Unit
+    sources.TxTable.append(spark, root, Seq((2L, "b")).toDF("k", "s"))
+    val m = sources.TxTable.readManifest(root,
+      sources.TxTable.currentVersion(root))
+    val added = sources.TxTable.dataEntries(m.files).filterNot(_ == "data/x")
+    assert(m.files.contains("data/x") && added.nonEmpty)
+    assert(!m.stats.contains("data/x"),
+      "a carried entry's footer was re-read by a later commit")
+    assert(added.forall(m.stats.contains),
+      s"a newly listed file got no stats: ${m.stats.keySet}")
+  }
+
+  test("TxTable commitReplace: a stale victim set and a changed " +
+      "delete-entry set both abort without a version and reclaim every " +
+      "staged file") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val root = mkTable("replaceconflict")
+    sources.TxTable.append(spark, root,
+      Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v").coalesce(1))
+    def refused(victims: Seq[String], dvAtRead: Seq[String]): String = {
+      val v = sources.TxTable.currentVersion(root)
+      val staged = sources.TxTable.writeData(spark, root,
+        Seq((3L, 3.0)).toDF("k", "v"))
+      assert(staged.nonEmpty &&
+        staged.forall(f => new java.io.File(root, f).isFile))
+      val e = intercept[IllegalArgumentException] {
+        sources.TxTable.commitReplace(root, "delete", victims, dvAtRead,
+          staged)
+      }
+      assert(sources.TxTable.currentVersion(root) == v,
+        "a refused replace landed a version")
+      assert(staged.forall(f => !new java.io.File(root, f).exists),
+        s"a refused replace leaked its staged files $staged")
+      e.getMessage
+    }
+    def dataNow = sources.TxTable.dataEntries(sources.TxTable.readManifest(
+      root, sources.TxTable.currentVersion(root)).files)
+    // stale victims: a concurrent rewrite replaced the file read
+    val read1 = dataNow
+    sources.TxTable.deleteWhere(spark, root, col("k") === 2): Unit
+    assert(refused(read1, Nil).contains("concurrent rewrite conflict"))
+    // changed delete-entry set: a position-delete commit landed after
+    // the input read, while every victim is still listed
+    val read2 = dataNow
+    sources.TxTable.deleteVector(spark, root, col("k") === 1): Unit
+    assert(dataNow == read2)
+    assert(refused(read2, Nil).contains("position-delete conflict"))
+  }
+
+  test("TxTable: a rewrite of a schema-evolved table keeps the added " +
+      "column of every victim, whichever victim's footer sorts first") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val root = mkTable("evorewrite")
+    // partition dirs make the victim order fixed: the pre-evolution
+    // file (p=a, no `w`) sorts before the post-evolution one (p=b)
+    sources.TxTable.appendPartitioned(spark, root,
+      Seq((1L, "a"), (3L, "a")).toDF("k", "p").coalesce(1), "p")
+    sources.TxTable.appendPartitioned(spark, root,
+      Seq((2L, "b", "w2"), (4L, "b", "w4")).toDF("k", "p", "w")
+        .coalesce(1), "p")
+    val (_, aff) = sources.TxTable.deleteWhere(spark, root,
+      col("k") === 1 || col("k") === 2)
+    assert(aff.size == 2, s"the delete should rewrite both files: $aff")
+    val got = sources.TxTable.snapshot(spark, root).orderBy("k")
+      .select("k", "w").collect().map(r => (r.getLong(0), r.getString(1)))
+    assert(got.toSeq == Seq((3L, null), (4L, "w4")),
+      s"the rewrite lost the evolved column: ${got.toSeq}")
+  }
+
   test("TxTable: a position-delete commit touches NO data file " +
       "(byte identity), converges, and reads equal the rewrite-delete " +
       "twin") {

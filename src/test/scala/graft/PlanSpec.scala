@@ -745,7 +745,7 @@ class PlanSpec extends AnyFunSuite with SparkFixture {
       s"CDC anti-join degraded to sort-merge:\n$changes")
     // the delete/merge rewrites execute eagerly inside their commits, so
     // their join plans are pinned structurally in LayoutSpec instead;
-    // their broadcast() hints are explicit in rewriteCommit/mergeCommit
+    // their broadcast() hints are explicit in deleteMatching/mergeCommit
   }
 
   test("TxTable DSv2 scan statistics drive the optimizer: a stats-" +
